@@ -192,7 +192,7 @@ object KgIncrementalJob {
         val combined = spark.read.parquet(s"$incr/old_raw").select(RAW.map(col): _*)
           .unionByName(newRaw)
         val (wm, nNewTriples) = writeTail(spark, f, output,
-          KgPipeline.resolveTriples(combined, canonNew), newRaw,
+          KgPipeline.resolveTriples(combined, canonNew, staged.nNodes), newRaw,
           layout, buckets, crashPoint)
         val (nEntities, nEdges) = finishTail(spark, f, output)
         return IncrMetrics(nTurns, nNewTriples, -1L, wm.buckets, wm.skippedBuckets,
@@ -286,10 +286,12 @@ object KgIncrementalJob {
     // The combined rows' resolution feeds BOTH the added-edges term and
     // the bucket rewrite — resolve once, cache (affected-bucket-sized)
     val combined = snapshot.unionByName(newRaw)
-    val resolvedCombined = KgPipeline.resolveTriples(combined, canonNew).cache()
+    // canonicalize yields one row per node: each map's row count is the
+    // node count its link state recorded at commit
+    val resolvedCombined = KgPipeline.resolveTriples(combined, canonNew, staged.nNodes).cache()
     val oldE = spark.read.parquet(s"$output/edges")
       .select($"src", $"dst", $"pred", $"weight".as("w_old"))
-    val removed = KgPipeline.edgesTable(KgPipeline.resolveTriples(snapshot, canonOld))
+    val removed = KgPipeline.edgesTable(KgPipeline.resolveTriples(snapshot, canonOld, st.nNodes))
       .select($"src", $"dst", $"pred", $"weight".as("w_rm"))
     val added = KgPipeline.edgesTable(resolvedCombined)
       .select($"src", $"dst", $"pred", $"weight".as("w_add"))
@@ -365,7 +367,7 @@ object KgIncrementalJob {
       .orElse(GraphSink.readLinkState(spark, s"$output/_linkstate"))
       .getOrElse(sys.error(s"no committed link state under $incr/linkstate_new or " +
         s"$output/_linkstate — the output is torn; restore from backup or re-run the full job"))
-    GraphSink.writeEntities(KgPipeline.entitiesTable(state.nodes, state.labels), output)
+    val nEntities = GraphSink.writeEntities(KgPipeline.entitiesTable(state.nodes, state.labels), output)
     if (exists(s"$incr/edges_new.done.json") && exists(s"$incr/edges_new")) {
       f.delete(new Path(s"$output/edges"), true)
       require(f.rename(new Path(s"$incr/edges_new"), new Path(s"$output/edges")),
@@ -381,7 +383,6 @@ object KgIncrementalJob {
     // listings (the global FileStatusCache has no TTL)
     Seq("entities", "edges", "triples", "_linkstate/nodes", "_linkstate/labels")
       .foreach(d => spark.catalog.refreshByPath(s"$output/$d"))
-    (spark.read.parquet(s"$output/entities").count(),
-      spark.read.parquet(s"$output/edges").count())
+    (nEntities, spark.read.parquet(s"$output/edges").count())
   }
 }

@@ -4,6 +4,9 @@ import graft.corpus.Turn
 import graft.pipeline.{GraphSink, KgPipeline, NerTraining}
 import org.apache.spark.sql.SparkSession
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 /** Production spark-submit entry point for the full KG-construction job
   * (BASELINE.json north rule: "runs via spark-submit on a multi-executor
   * cluster"; SURVEY.md §3.3). Reads an Iceberg/Parquet transcript table
@@ -25,7 +28,11 @@ import org.apache.spark.sql.SparkSession
   *     [--buckets 64]
   *
   * Prints one JSON metrics line (rows, convs, buckets written/skipped,
-  * entity/edge counts) — the job's observability contract.
+  * entity/edge counts) — the job's observability contract. Every figure
+  * in it comes from work the job does anyway, not from a closing count:
+  * turns from the cached tagged rows, triples from the committed bucket
+  * manifests (so a resume reports the whole table), entities and edges
+  * observed on their own writes.
   */
 object KgJob {
 
@@ -69,6 +76,13 @@ object KgJob {
     * job's serial fraction (driver planning/codegen, model load, the CC
     * dispatch count) separately from the scalable work when measuring
     * N-vs-4N (BENCH/job_scaling.json).
+    *
+    * One execution per fact: a single node count decides both the CC and
+    * the resolve dispatch (KgPipeline.runTagged), and the metrics come
+    * from data the run already holds. After the triple write commits its
+    * manifests, the three alias-scale writes — entities, edges, link
+    * state — run concurrently on a pool of their own (see `allOf`); the
+    * CC checkpoint is deleted only once all three have succeeded.
     */
   def run(spark: SparkSession, input: String, modelPath: String, output: String,
       buckets: Int = 16, dayPartition: Boolean = false): JobMetrics = {
@@ -87,8 +101,11 @@ object KgJob {
     // committed iteration instead of iteration 0 (engaged on the
     // >CC_LOCAL_THRESHOLD loop path; see connectedComponentsLoopDurable)
     val out = KgPipeline.run(spark, turns, model, Some(s"$output/_cc_checkpoints"))
+    // the node count behind the dispatch filled the tagged cache, so
+    // counting turns re-reads cached rows, not the tagger
+    val nTurns = out.tagged.count()
     // this wall covers what run() actually FORCES: the tagging pass
-    // (cache fill via the CC-dispatch node count) + blocking join + CC.
+    // (cache fill via the dispatch node count) + blocking join + CC.
     // canonicalize/resolveTriples stay lazy and execute inside the
     // write wall below — the labels state the forced work, not the
     // lazily-attributed stage names
@@ -98,20 +115,17 @@ object KgJob {
     out.resolvedTriples.cache()
     val wm = GraphSink.writeTriples(spark, out.resolvedTriples, output, buckets,
       dayPartition = dayPartition)
+    val nTriples = GraphSink.committedRows(spark, output)
     phase("resolve_write_triples_manifests")
-    GraphSink.writeEntities(out.entities, output)
-    GraphSink.writeEdges(out.edges, output)
     // link state makes the output INCREMENTAL-READY: KgIncrementalJob
     // merges later transcript batches against these nodes/labels instead
-    // of relinking the whole corpus (alias-scale tables — two small
-    // parquet writes). A full run starts the applied-batch ledger empty.
-    GraphSink.writeLinkState(spark, out.nodes, out.components, s"$output/_linkstate")
-    phase("write_entities_edges_linkstate")
-    val nTurns = out.tagged.count()
-    val nEntities = out.entities.count()
-    val nEdges = out.edges.count()
-    val nTriples = out.resolvedTriples.count()
-    phase("metrics_counts")
+    // of relinking the whole corpus. A full run starts the applied-batch
+    // ledger empty. The three writes are independent alias-scale tables.
+    val Seq(nEntities, nEdges, _) = allOf("kgjob-tail", Seq(
+      () => GraphSink.writeEntities(out.entities, output),
+      () => GraphSink.writeEdges(out.edges, output),
+      () => { GraphSink.writeLinkState(spark, out.nodes, out.components, s"$output/_linkstate"); 0L }))
+    phase("write_entities_edges_linkstate_concurrent")
     out.resolvedTriples.unpersist()
     // the CC frontier checkpoint exists only to resume a KILLED linking
     // phase; once the job's final manifests are committed it is dead
@@ -123,5 +137,34 @@ object KgJob {
     val hfs = ccDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (hfs.exists(ccDir)) hfs.delete(ccDir, true)
     JobMetrics(nTurns, nTriples, nEntities, nEdges, wm.buckets, wm.skippedBuckets)
+  }
+
+  /** Runs every task on a pool of its own (one thread each, named
+    * `<name>-<i>`) and waits for ALL of them, failed or not. The threads
+    * are created by the calling thread, so they inherit its Spark local
+    * properties — job group, scheduler pool — and their jobs are
+    * attributed to the caller. The first failure in task order is
+    * rethrown with the others attached as suppressed; the pool is shut
+    * down before this returns either way.
+    */
+  private def allOf[T](name: String, tasks: Seq[() => T]): Seq[T] = {
+    val seq = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(tasks.size,
+      (r: Runnable) => new Thread(r, s"$name-${seq.incrementAndGet()}"))
+    try {
+      val futures = tasks.map(task => pool.submit(new Callable[T] { def call(): T = task() }))
+      val outcomes = futures.map { f =>
+        try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) }
+      }
+      val failures = outcomes.collect { case Left(e) => e }
+      for (first <- failures.headOption) {
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+      outcomes.collect { case Right(v) => v }
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
   }
 }

@@ -52,6 +52,11 @@ object GraphSink {
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  private def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
   def doneBuckets(spark: SparkSession, outDir: String): Set[Int] = {
     val dir = new Path(s"$outDir/_manifests")
     val f = fs(spark, outDir)
@@ -157,17 +162,15 @@ object GraphSink {
       .partitionBy(partCols: _*)
       .parquet(s"$outDir/triples")
 
-    // an all-buckets-done resume writes zero partitions: the observed
-    // plan then reports no metrics at all — treat as 0, don't throw
-    val rows = scala.util.Try(obs.get("rows").asInstanceOf[Long]).getOrElse(0L)
-    val convs = scala.util.Try(obs.get("convs").asInstanceOf[Long]).getOrElse(0L)
-    // only the legitimate zero-row resume may default to the empty set: a
-    // cast/metric failure on a NON-empty write must propagate, or a
-    // successful data write silently commits with no manifests and every
-    // later run reprocesses all of it (ADVICE r3)
+    // an all-buckets-done resume writes zero rows and may report no
+    // metrics at all; a metric missing from a NON-empty write fails here,
+    // or a successful data write would commit with no manifests and every
+    // later run would reprocess all of it (ADVICE r3)
+    val metrics = observedMetrics(obs, pending)
+    val rows = metrics.fold(0L)(_("rows").asInstanceOf[Long])
+    val convs = metrics.fold(0L)(_("convs").asInstanceOf[Long])
     val written: Set[Int] =
-      if (rows == 0L) Set.empty
-      else obs.get("written_buckets").asInstanceOf[Seq[Int]].toSet
+      metrics.fold(Set.empty[Int])(_("written_buckets").asInstanceOf[Seq[Int]].toSet)
 
     // per-bucket manifest: rows + order-independent content fingerprint,
     // computed by READING BACK the just-written partition files — NOT by
@@ -211,6 +214,41 @@ object GraphSink {
     WriteMetrics(perBucket.length, done.size, rows, convs)
   }
 
+  /** The metrics `obs` collected on the write of `written`, or None for
+    * a write of no rows. Spark completes an observation WITHOUT metrics
+    * when the observed operator is gone from the executed plan, as when
+    * an empty input lets the optimizer or AQE prune the subtree under a
+    * shuffle (a resume with every bucket committed). That is accepted
+    * only for a genuinely empty input, checked on this path alone so a
+    * normal write takes no extra job; otherwise the write fails loudly
+    * instead of committing a row count of 0 for data it put on disk.
+    */
+  def observedMetrics(obs: Observation, written: DataFrame): Option[Map[String, Any]] = {
+    val m = obs.get
+    if (m.nonEmpty) Some(m)
+    else if (written.isEmpty) None
+    else throw new IllegalStateException(
+      s"observation ${obs.name} reported no metrics for a write of non-empty input; " +
+        "refusing to commit a row count of 0")
+  }
+
+  /** Total rows over every committed bucket manifest under `outDir`: the
+    * triples table's row count as of its last commit, read from the
+    * manifests alone (on a resume it covers the skipped buckets too).
+    */
+  def committedRows(spark: SparkSession, outDir: String): Long = {
+    val f = fs(spark, outDir)
+    val dir = new Path(s"$outDir/_manifests")
+    if (!f.exists(dir)) 0L
+    else f.listStatus(dir).toSeq.map(_.getPath)
+      .filter(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
+      .map { p =>
+        val json = readText(f, p)
+        """"rows":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
+          .getOrElse(sys.error(s"manifest $p records no rows: $json"))
+      }.sum
+  }
+
   /** Refuse to resume under a different partition function or config:
     * reads one committed manifest and compares its recorded n_buckets /
     * config against the current run's. Manifests written before these
@@ -223,8 +261,7 @@ object GraphSink {
     val sample = f.listStatus(dir).toSeq
       .map(_.getPath).find(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
     for (p <- sample) {
-      val in = f.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val json = readText(f, p)
       for (m <- """"n_buckets":(\d+)""".r.findFirstMatchIn(json)) {
         require(m.group(1).toInt == nBuckets,
           s"resume with nBuckets=$nBuckets against a table committed with " +
@@ -257,7 +294,7 @@ object GraphSink {
     * the full job as the remediation).
     */
   final case class LinkState(
-      nodes: DataFrame, labels: DataFrame, appliedTokens: Seq[String])
+      nodes: DataFrame, labels: DataFrame, appliedTokens: Seq[String], nNodes: Long)
 
   private def linkStateMarker(dir: String) = new Path(s"$dir/_committed.json")
 
@@ -292,8 +329,7 @@ object GraphSink {
     // would resolve to deleted part files
     spark.catalog.refreshByPath(s"$dir/nodes")
     spark.catalog.refreshByPath(s"$dir/labels")
-    val in = f.open(linkStateMarker(dir))
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    val json = readText(f, linkStateMarker(dir))
     val nRecorded = """"n_nodes":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
       .getOrElse(sys.error(s"malformed link-state marker in $dir: $json"))
     val applied = """"applied":\[([^\]]*)\]""".r.findFirstMatchIn(json)
@@ -304,7 +340,7 @@ object GraphSink {
     require(nodes.count() == nRecorded,
       s"link state in $dir holds ${nodes.count()} nodes but its marker recorded " +
         s"$nRecorded — the table is torn; re-run the full KgJob to rebuild it")
-    Some(LinkState(nodes, spark.read.parquet(s"$dir/labels"), applied))
+    Some(LinkState(nodes, spark.read.parquet(s"$dir/labels"), applied, nRecorded))
   }
 
   /** The layout a committed table was written with, read from one
@@ -318,8 +354,7 @@ object GraphSink {
     val sample = f.listStatus(dir).toSeq
       .map(_.getPath).find(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
     sample.map { p =>
-      val in = f.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val json = readText(f, p)
       val nb = """"n_buckets":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
         .getOrElse(sys.error(s"manifest $p lacks n_buckets — table predates the layout record"))
       val cfg = """"config":"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1)).getOrElse("v1")
@@ -334,17 +369,23 @@ object GraphSink {
     * every partition directory — ~(tasks × preds) tiny files for the
     * edges table — paying file-open and commit-rename overhead per
     * fragment and leaving a small-files layout for readers. One
-    * partition value per task ⇒ one file per directory.
+    * partition value per task ⇒ one file per directory. Each returns
+    * the rows it wrote, observed on the write pass itself.
     */
-  def writeEntities(entities: DataFrame, outDir: String): Unit =
-    entities.repartition(col("entity_type")).write.mode(SaveMode.Overwrite)
-      .partitionBy("entity_type")
-      .parquet(s"$outDir/entities")
+  def writeEntities(entities: DataFrame, outDir: String): Long =
+    writePartitioned(entities, "entity_type", s"$outDir/entities")
 
-  def writeEdges(edges: DataFrame, outDir: String): Unit =
-    edges.repartition(col("pred")).write.mode(SaveMode.Overwrite)
-      .partitionBy("pred")
-      .parquet(s"$outDir/edges")
+  def writeEdges(edges: DataFrame, outDir: String): Long =
+    writePartitioned(edges, "pred", s"$outDir/edges")
+
+  private def writePartitioned(df: DataFrame, partCol: String, path: String): Long = {
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("rows"))
+      .repartition(col(partCol)).write.mode(SaveMode.Overwrite)
+      .partitionBy(partCol)
+      .parquet(path)
+    observedMetrics(obs, df).fold(0L)(_("rows").asInstanceOf[Long])
+  }
 
   /** Metrics rollup over the materialized graph: triple counts by
     * (day, pred) with subtotals (SURVEY.md §2 rows 57–58). When the

@@ -155,14 +155,19 @@ object KgPipeline {
   val CC_LOCAL_THRESHOLD = 200000L
 
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val n = nodes.count()
-    if (n <= CC_LOCAL_THRESHOLD) connectedComponentsLocal(nodes, edges)
+      checkpointDir: Option[String] = None): DataFrame =
+    connectedComponents(nodes, edges, checkpointDir, nodes.count())
+
+  /** The CC dispatch for a caller that already holds `nNodes`, the row
+    * count of `nodes`: the decision then takes no Spark job of its own.
+    */
+  def connectedComponents(nodes: DataFrame, edges: DataFrame,
+      checkpointDir: Option[String], nNodes: Long): DataFrame =
+    if (nNodes <= CC_LOCAL_THRESHOLD) connectedComponentsLocal(nodes, edges)
     else checkpointDir match {
       case Some(dir) => connectedComponentsLoopDurable(nodes, edges, dir)
       case None      => connectedComponentsLoop(nodes, edges)
     }
-  }
 
   /** Driver-side union-find over the (small) collected node/edge sets. */
   def connectedComponentsLocal(nodes: DataFrame, edges: DataFrame): DataFrame = {
@@ -407,6 +412,11 @@ object KgPipeline {
 
   /** Canonicalization: component -> canonical surface (min norm, matching
     * the oracle) + stable entity_id = xxhash64(tag|canonical_norm).
+    * Exactly one row per row of `nodes` (each node joins its one label
+    * and its component's one canonical row), so the node count is also
+    * the canonical map's row count — `runTagged` lets that one count
+    * decide both the CC and the resolve dispatch (pinned by
+    * SparkParitySpec).
     */
   def canonicalize(nodes: DataFrame, labels: DataFrame): DataFrame = {
     val withComp = nodes.join(labels, "node_id")
@@ -440,8 +450,13 @@ object KgPipeline {
   val BROADCAST_MAP_THRESHOLD = 2000000L
 
   def resolveTriples(triples: DataFrame, canonMap: DataFrame): DataFrame =
-    if (canonMap.count() <= BROADCAST_MAP_THRESHOLD)
-      resolveTriplesBroadcast(triples, canonMap)
+    resolveTriples(triples, canonMap, canonMap.count())
+
+  /** The resolve dispatch for a caller that already holds `mapRows`, the
+    * row count of `canonMap`: the decision then takes no Spark job.
+    */
+  def resolveTriples(triples: DataFrame, canonMap: DataFrame, mapRows: Long): DataFrame =
+    if (mapRows <= BROADCAST_MAP_THRESHOLD) resolveTriplesBroadcast(triples, canonMap)
     else resolveTriplesSalted(triples, canonMap)
 
   /** Broadcast path: one narrow stage over the triple stream. */
@@ -637,8 +652,8 @@ object KgPipeline {
   def run(spark: SparkSession, turns: Dataset[Turn], model: Broadcast[NerModel],
       ccCheckpointDir: Option[String] = None): KgOutput =
     // cache the NLP stage output BEFORE any downstream action: the
-    // adaptive CC/resolve decisions call count(), which would otherwise
-    // re-run generation + tagging once per action
+    // node count behind the CC/resolve dispatch is the first action, and
+    // every later one would otherwise re-run generation + tagging
     runTagged(spark, tagTurns(turns, model).cache(), ccCheckpointDir)
 
   def runTagged(spark: SparkSession, tagged: Dataset[TaggedRow],
@@ -646,11 +661,14 @@ object KgPipeline {
     val mentions = mentionRows(tagged)
     val triples = tripleRows(tagged)
     val nodes = surfaceNodes(mentions).cache()
+    // canonicalize returns one row per node, so this one count decides
+    // both the CC dispatch and the resolve dispatch
+    val nNodes = nodes.count()
     val (edges0, overflow) = candidateEdges(nodes)
-    val labels = connectedComponents(nodes, edges0, ccCheckpointDir)
+    val labels = connectedComponents(nodes, edges0, ccCheckpointDir, nNodes)
     val canonMap = canonicalize(nodes, labels)
     val entities = entitiesTable(nodes, labels)
-    val resolved = resolveTriples(triples, canonMap)
+    val resolved = resolveTriples(triples, canonMap, nNodes)
     val kgEdges = edgesTable(resolved)
     KgOutput(tagged, mentions, triples, nodes, edges0, labels, entities, resolved, kgEdges, overflow)
   }

@@ -509,8 +509,12 @@ object StreamingIngest {
       expr("bit_xor(xxhash64(conv_id, turn_idx, subj, pred, obj))").as("fp"))
     observed.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$outDir/$table/batch=$batchId")
-    val rows = scala.util.Try(obs.get("rows").asInstanceOf[Long]).getOrElse(0L)
-    val fp = scala.util.Try(obs.get("fp").asInstanceOf[Long]).getOrElse(0L)
+    // no metrics at all only for a genuinely empty batch; a non-empty one
+    // aborts here (Structured Streaming retries it) instead of committing
+    // a rows=0 manifest. bit_xor over zero rows is NULL, read as 0.
+    val metrics = graft.pipeline.GraphSink.observedMetrics(obs, batch)
+    val rows = metrics.fold(0L)(_("rows").asInstanceOf[Long])
+    val fp = metrics.fold(0L)(_("fp").asInstanceOf[Long])
     val json = s"""{"batch":$batchId,"rows":$rows,"fingerprint":$fp$extraManifest}"""
     hfs.mkdirs(manifest.getParent)
     val tmp = new org.apache.hadoop.fs.Path(

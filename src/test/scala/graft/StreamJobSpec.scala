@@ -1,8 +1,10 @@
 package graft
 
-import graft.pipeline.{KgPipeline, NerTraining, Transcripts}
+import graft.pipeline.{GraphSink, KgPipeline, NerTraining, Transcripts}
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -236,5 +238,39 @@ class StreamJobSpec extends AnyFunSuite {
     }
     assert(manifest(victim).contains(s""""canon_version":"$v2""""), manifest(victim))
     assert(manifest(keep).contains(s""""canon_version":"$v1""""), manifest(keep))
+  }
+
+  test("a write whose observation never arrives aborts instead of committing rows=0") {
+    val out = java.nio.file.Files.createTempDirectory("streamjob_noobs").toString
+    // a session whose optimizer drops every observed-metrics operator:
+    // the write itself runs, but Spark completes each Observation empty
+    val stripped = spark.newSession()
+    stripped.experimental.extraOptimizations = Seq(StreamJobSpec.DropObservations)
+    import stripped.implicits._
+    val batch = Seq(("c1", 0, "Ann", "knows", "Bob"), ("c2", 1, "Bob", "knows", "Cyd"))
+      .toDF("conv_id", "turn_idx", "subj", "pred", "obj")
+    val manifest = (id: Long) => new java.io.File(s"$out/_manifests/stream-batch-$id.json")
+
+    val e = intercept[IllegalStateException](StreamingIngest.writeBatch(batch, out, 0L))
+    assert(e.getMessage.contains("no metrics"), e.getMessage)
+    assert(!manifest(0L).exists(), "a batch without its observation must not commit")
+
+    // a genuinely empty batch is the one case that commits without metrics
+    StreamingIngest.writeBatch(batch.limit(0), out, 1L)
+    val committed = new String(java.nio.file.Files.readAllBytes(manifest(1L).toPath), "UTF-8")
+    assert(committed.contains("\"rows\":0,"), committed)
+
+    // the batch triple sink and the dimension writes refuse the same way
+    val graph = s"$out/graph"
+    intercept[IllegalStateException](GraphSink.writeTriples(stripped, batch, graph, 4))
+    assert(GraphSink.doneBuckets(stripped, graph).isEmpty, "triples committed without metrics")
+    intercept[IllegalStateException](GraphSink.writeEdges(batch, graph))
+  }
+}
+
+object StreamJobSpec {
+  /** Removes every `observe` operator from the optimized plan. */
+  object DropObservations extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan = plan.transform { case c: CollectMetrics => c.child }
   }
 }

@@ -130,6 +130,26 @@ class SparkParitySpec extends AnyFunSuite {
     assert(viaSalt == plain)
   }
 
+  test("canonicalize yields exactly one row per node (the shared dispatch count)") {
+    import spark.implicits._
+    // a three-member ORG component, and the norm "acme" under two tags
+    val nodes = Seq(("acme", "ORG", 1L), ("acme corp", "ORG", 2L), ("acme inc", "ORG", 3L),
+      ("acme", "PER", 4L), ("zed", "PER", 5L)).toDF("norm", "tag", "node_id")
+    val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 5L)).toDF("node_id", "component")
+    val canon = KgPipeline.canonicalize(nodes, labels)
+      .select($"node_id", $"canonical_norm", $"entity_id").as[(Long, String, Long)].collect()
+    assert(canon.map(_._1).sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L), canon.toSeq)
+    val byNode = canon.map(r => r._1 -> (r._2, r._3)).toMap
+    assert(Seq(1L, 2L, 3L).map(byNode).distinct == Seq(byNode(1L)) && byNode(1L)._1 == "acme")
+    assert(byNode(4L)._1 == "acme" && byNode(4L)._2 != byNode(1L)._2,
+      "the same norm under two tags must stay two entities")
+    // and on the pipeline's own output, which has multi-member components
+    assert(kg.components.groupBy($"component").count().where($"count" > 1).count() > 0)
+    val real = KgPipeline.canonicalize(kg.nodes, kg.components)
+    val nNodes = kg.nodes.count()
+    assert(real.count() == nNodes && real.select($"node_id").distinct().count() == nNodes)
+  }
+
   test("pipeline is deterministic across runs") {
     val again = KgPipeline.run(spark, Transcripts.generate(spark, N),
       spark.sparkContext.broadcast(sparkModel))
