@@ -1,12 +1,10 @@
 package graft
 
 import graft.corpus.Turn
-import graft.pipeline.{GraphSink, KgPipeline, NerTraining}
+import graft.pipeline.{Commit, GraphSink, KgPipeline, NerTraining}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-
-import java.nio.charset.StandardCharsets
 
 /** Incremental KG maintenance — the production shape at 10^12 turns,
   * where re-running the full job for each day of new transcripts would
@@ -30,9 +28,10 @@ import java.nio.charset.StandardCharsets
   *      contribution) instead of re-aggregating the whole table;
   *   5. entities and link state are alias-scale — rewritten outright.
   *
-  * Crash safety follows the repo's one protocol (stage → rename-commit
-  * marker → mutate → swap), with every read the tail needs staged
-  * under `<output>/_incr/` BEFORE the first live-directory mutation:
+  * Crash safety follows the repo's one protocol, `graft.pipeline.Commit`
+  * (stage → commit marker → mutate → swap), with every read the tail
+  * needs staged under `<output>/_incr/` BEFORE the first live-directory
+  * mutation:
   *
   *   marker.json                intent: batch token, bucket set, layout
   *   linkstate_new/             staged merged nodes+labels (committed)
@@ -86,31 +85,6 @@ object KgIncrementalJob {
 
   // ------------------------------------------------------------- helpers
 
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Write-once: a marker that already exists is left alone (resume paths
-    * re-traverse commit points; delete-then-rename would open a window
-    * where `manifests_invalidated` is absent while the table IS mutated,
-    * and the next invocation would mistake that for untouched state).
-    */
-  private def writeMarker(f: FileSystem, path: String, json: String): Unit = {
-    if (f.exists(new Path(path))) return
-    val tmp = new Path(path + ".tmp")
-    val out = f.create(tmp, true)
-    out.write(json.getBytes(StandardCharsets.UTF_8))
-    out.close()
-    require(f.rename(tmp, new Path(path)), s"marker commit rename failed: $path")
-  }
-
-  private def readJson(f: FileSystem, path: String): String = {
-    val in = f.open(new Path(path))
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
-  private def deleteManifests(f: FileSystem, output: String, buckets: Seq[Int]): Unit =
-    for (b <- buckets) f.delete(new Path(s"$output/_manifests/bucket-$b.json"), false)
-
   /** Batch identity: order-independent content fingerprint of the input
     * turns. Stable across re-invocations of the same batch, different
     * for any other batch — the key for both mid-write resume (only the
@@ -139,7 +113,7 @@ object KgIncrementalJob {
       failAfter: Option[String] = None): IncrMetrics = {
     import spark.implicits._
     val incr = s"$output/_incr"
-    val f = fsOf(spark, output)
+    val f = Commit.fs(spark, output)
     def exists(p: String) = f.exists(new Path(p))
     // phase walls to stderr, mirroring KgJob: the apply's cost story at
     // scale is "batch-proportional + fixed planning" — the walls make the
@@ -158,10 +132,8 @@ object KgIncrementalJob {
     val (nTurns, token) = batchToken(turns.toDF())
 
     // ---- recovery: an _incr staging area from a previous invocation
-    if (exists(s"$incr/marker.json")) {
-      val mj = readJson(f, s"$incr/marker.json")
-      val mToken = """"token":"([^"]+)"""".r.findFirstMatchIn(mj)
-        .map(_.group(1)).getOrElse(sys.error(s"malformed $incr/marker.json: $mj"))
+    for (mk <- Commit.readFields(f, s"$incr/marker.json")) {
+      val mToken = mk.str("token")
       if (!exists(s"$incr/manifests_invalidated.json")) {
         // intent was staged but nothing live was mutated — prior state
         // is fully intact; discard and start over
@@ -181,8 +153,6 @@ object KgIncrementalJob {
             s"invalidated, rewrite unfinished) but the current input is batch $token — re-run " +
             "with the original batch's input to complete it before applying a new batch")
         System.err.println(s"[kgincr] resuming interrupted rewrite of batch $mToken")
-        val layout = markerLayout(mj)
-        val buckets = markerBuckets(mj)
         val staged = GraphSink.readLinkState(spark, s"$incr/linkstate_new").getOrElse(
           sys.error(s"$incr/linkstate_new lost its commit marker — staging is torn; " +
             "restore the output from backup or re-run the full KgJob"))
@@ -193,7 +163,7 @@ object KgIncrementalJob {
           .unionByName(newRaw)
         val (wm, nNewTriples) = writeTail(spark, f, output,
           KgPipeline.resolveTriples(combined, canonNew, staged.nNodes), newRaw,
-          layout, buckets, crashPoint)
+          GraphSink.layoutOf(mk), mk.ints("buckets"), crashPoint)
         val (nEntities, nEdges) = finishTail(spark, f, output)
         return IncrMetrics(nTurns, nNewTriples, -1L, wm.buckets, wm.skippedBuckets,
           nEntities, nEdges)
@@ -302,14 +272,13 @@ object KgIncrementalJob {
           + coalesce($"w_add", lit(0.0))).as("weight"))
       .where($"weight" > 0)
       .write.mode(SaveMode.Overwrite).partitionBy("pred").parquet(s"$incr/edges_new")
-    writeMarker(f, s"$incr/edges_new.done.json", "{}")
+    Commit.commit(f, s"$incr/edges_new.done.json", Commit.json())
     phase("edges_delta")
 
     // commit the intent: token + bucket set + layout (the resume path
     // must not depend on re-reading manifests it is about to delete)
-    writeMarker(f, s"$incr/marker.json",
-      s"""{"token":"$token","buckets":[${bucketsB.mkString(",")}],""" +
-        s""""n_buckets":$nBuckets,"config":"$cfg","day_partition":$dayPartition}""")
+    Commit.commit(f, s"$incr/marker.json", Commit.json("token" -> token, "buckets" -> bucketsB,
+      "n_buckets" -> nBuckets, "config" -> cfg, "day_partition" -> dayPartition))
     crashPoint("staged")
 
     val (wm, nNewTriples) = writeTail(spark, f, output, resolvedCombined, newRaw,
@@ -323,17 +292,6 @@ object KgIncrementalJob {
       nEntities, nEdges)
   }
 
-  private def markerLayout(mj: String): (Int, String, Boolean) = (
-    """"n_buckets":(\d+)""".r.findFirstMatchIn(mj).map(_.group(1).toInt)
-      .getOrElse(sys.error(s"marker lacks n_buckets: $mj")),
-    """"config":"([^"]*)"""".r.findFirstMatchIn(mj).map(_.group(1)).getOrElse("v1"),
-    """"day_partition":(true|false)""".r.findFirstMatchIn(mj).exists(_.group(1).toBoolean))
-
-  private def markerBuckets(mj: String): Seq[Int] =
-    """"buckets":\[([^\]]*)\]""".r.findFirstMatchIn(mj)
-      .map(_.group(1)).getOrElse(sys.error(s"marker lacks buckets: $mj"))
-      .split(",").filter(_.nonEmpty).map(_.trim.toInt).toSeq
-
   /** The live triples mutation: invalidate affected manifests, rewrite
     * exactly those buckets from the combined (snapshot + new) rows, and
     * commit `triples.done`. Idempotent under same-batch re-invocation —
@@ -346,11 +304,11 @@ object KgIncrementalJob {
       crashPoint: String => Unit): (GraphSink.WriteMetrics, Long) = {
     val (nBuckets, cfg, dayPartition) = layout
     val incr = s"$output/_incr"
-    writeMarker(f, s"$incr/manifests_invalidated.json", "{}")
-    deleteManifests(f, output, bucketsB)
+    Commit.commit(f, s"$incr/manifests_invalidated.json", Commit.json())
+    for (b <- bucketsB) f.delete(new Path(s"$output/_manifests/bucket-$b.json"), false)
     crashPoint("invalidated")
     val wm = GraphSink.writeTriples(spark, resolved, output, nBuckets, cfg, dayPartition)
-    writeMarker(f, s"$incr/triples.done.json", "{}")
+    Commit.commit(f, s"$incr/triples.done.json", Commit.json())
     crashPoint("triples")
     (wm, newRaw.count())
   }
@@ -368,16 +326,10 @@ object KgIncrementalJob {
       .getOrElse(sys.error(s"no committed link state under $incr/linkstate_new or " +
         s"$output/_linkstate — the output is torn; restore from backup or re-run the full job"))
     val nEntities = GraphSink.writeEntities(KgPipeline.entitiesTable(state.nodes, state.labels), output)
-    if (exists(s"$incr/edges_new.done.json") && exists(s"$incr/edges_new")) {
-      f.delete(new Path(s"$output/edges"), true)
-      require(f.rename(new Path(s"$incr/edges_new"), new Path(s"$output/edges")),
-        s"edges swap rename failed under $output")
-    }
-    if (exists(s"$incr/linkstate_new/_committed.json")) {
-      f.delete(new Path(s"$output/_linkstate"), true)
-      require(f.rename(new Path(s"$incr/linkstate_new"), new Path(s"$output/_linkstate")),
-        s"link-state swap rename failed under $output")
-    }
+    if (exists(s"$incr/edges_new.done.json") && exists(s"$incr/edges_new"))
+      Commit.swap(f, s"$incr/edges_new", s"$output/edges")
+    if (exists(s"$incr/linkstate_new/_committed.json"))
+      Commit.swap(f, s"$incr/linkstate_new", s"$output/_linkstate")
     f.delete(new Path(incr), true)
     // every live dir this method mutates in place: drop the cached file
     // listings (the global FileStatusCache has no TTL)

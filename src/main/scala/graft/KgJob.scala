@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.Turn
-import graft.pipeline.{GraphSink, KgPipeline, NerTraining}
+import graft.pipeline.{Commit, GraphSink, KgPipeline, NerTraining}
 import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
@@ -15,8 +15,8 @@ import java.util.concurrent.atomic.AtomicInteger
   * materializes the graph (triples/entities/edges) with per-bucket
   * lineage manifests. Re-running against the same output directory
   * RESUMES: committed buckets (manifest present) are skipped, pending
-  * ones are idempotently rewritten (GraphSink's dynamic-overwrite +
-  * rename-commit protocol).
+  * ones are idempotently rewritten (GraphSink's dynamic overwrite, with
+  * each bucket manifest committed through `graft.pipeline.Commit`).
   *
   * Usage (spark-submit supplies master/executor conf; nothing here pins
   * a master so the same jar runs at N and 4N executors unchanged):
@@ -99,7 +99,7 @@ object KgJob {
     // CC frontier checkpoints live under the job output dir: a killed
     // linking phase resumes the label-propagation loop from its last
     // committed iteration instead of iteration 0 (engaged on the
-    // >CC_LOCAL_THRESHOLD loop path; see connectedComponentsLoopDurable)
+    // >CC_LOCAL_THRESHOLD loop path; see connectedComponentsLoop)
     val out = KgPipeline.run(spark, turns, model, Some(s"$output/_cc_checkpoints"))
     // the node count behind the dispatch filled the tagged cache, so
     // counting turns re-reads cached rows, not the tagger
@@ -133,9 +133,7 @@ object KgJob {
     // and a later run reusing the dir with different input would trip
     // the node-set fingerprint guard even after clearing triples +
     // _manifests (ADVICE r4). Delete it at the success point.
-    val ccDir = new org.apache.hadoop.fs.Path(s"$output/_cc_checkpoints")
-    val hfs = ccDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (hfs.exists(ccDir)) hfs.delete(ccDir, true)
+    Commit.fs(spark, output).delete(new org.apache.hadoop.fs.Path(s"$output/_cc_checkpoints"), true)
     JobMetrics(nTurns, nTriples, nEntities, nEdges, wm.buckets, wm.skippedBuckets)
   }
 

@@ -717,9 +717,7 @@ object SparkEntry {
       // earlier run would flip this into the resume path (0 pending
       // buckets) and make the returned manifest table nondeterministic
       val outDir = s"/tmp/graft_kg_out/${new java.io.File(d).getName}"
-      val p = new org.apache.hadoop.fs.Path(outDir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+      graft.pipeline.Commit.fs(s, outDir).delete(new org.apache.hadoop.fs.Path(outDir), true)
       graft.pipeline.GraphSink.writeTriples(s, b.out.resolvedTriples, outDir, 16)
       graft.pipeline.GraphSink.writeEntities(b.out.entities, outDir)
       graft.pipeline.GraphSink.writeEdges(b.out.edges, outDir)
@@ -736,9 +734,7 @@ object SparkEntry {
     "kg_day_prune" -> ((s, d) => {
       val b = Kg.built(s, d)
       val outDir = s"/tmp/graft_kg_day/${new java.io.File(d).getName}"
-      val p = new org.apache.hadoop.fs.Path(outDir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+      graft.pipeline.Commit.fs(s, outDir).delete(new org.apache.hadoop.fs.Path(outDir), true)
       // day-partition ONE MONTH of the corpus, not all of it: the
       // synthetic generator spaces conversations 1 h apart, so sf0.1
       // spans ~8 years and a full bucket×day write would fan out into

@@ -11,8 +11,8 @@ import org.apache.spark.sql.streaming.Trigger
   * micro-batch is tagged with the broadcast NER model, deduped within
   * the watermark, exploded to triples, resolved against the latest
   * published canonical map, and committed exactly-once through the
-  * GraphSink manifest protocol (batch-scoped directory + rename-committed
-  * manifest). The canonical map REFRESHES between batches: when the
+  * GraphSink manifest protocol (batch-scoped directory + a manifest
+  * committed through `graft.pipeline.Commit`). The canonical map REFRESHES between batches: when the
   * batch linking job re-publishes it (StreamingIngest.publishCanonMap
   * bumps `_canon_version`), the next micro-batch resolves against the
   * new snapshot without a restart.

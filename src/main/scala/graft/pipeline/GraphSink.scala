@@ -4,8 +4,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 
-import java.nio.charset.StandardCharsets
-
 /** Graph materialization with per-partition lineage manifests and
   * checkpointed resumability (SURVEY.md §7.5, north rule: "resumable from
   * checkpoint with per-partition lineage + metrics").
@@ -17,8 +15,8 @@ import java.nio.charset.StandardCharsets
   * Protocol per conv-bucket partition:
   *   1. triples for pending buckets are written via
   *      partitionBy(conv_bucket) (directory-atomic per partition),
-  *   2. a manifest JSON {bucket, rows, fingerprint, config} is written
-  *      AFTER the data via temp-file + rename (the commit point).
+  *   2. a manifest JSON {bucket, rows, fingerprint, config} is committed
+  *      AFTER the data through [[Commit]] (the commit point).
   * Resume = list manifests, anti-join done buckets, process the rest.
   * The fingerprint is an order-independent sum of xxhash64 over the
   * partition's logical content, so a resumed run can verify integrity
@@ -44,29 +42,17 @@ object GraphSink {
     resolvedTriples.withColumn("conv_bucket",
       pmod(xxhash64(col("conv_id")), lit(nBuckets)).cast("int"))
 
-  /** FS resolved from the target path, not the default filesystem — a
-    * non-default-FS outDir (hdfs://, s3a://) would otherwise be checked
-    * against the wrong filesystem (same fix as StreamingIngest.writeBatch,
-    * ADVICE r2).
-    */
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readText(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
-  def doneBuckets(spark: SparkSession, outDir: String): Set[Int] = {
+  /** Every committed bucket manifest under `outDir`. */
+  private def manifests(f: FileSystem, outDir: String): Seq[Path] = {
     val dir = new Path(s"$outDir/_manifests")
-    val f = fs(spark, outDir)
-    if (!f.exists(dir)) Set.empty
-    else f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case name if name.startsWith("bucket-") && name.endsWith(".json") =>
-        name.stripPrefix("bucket-").stripSuffix(".json").toInt
-      }.toSet
+    if (!f.exists(dir)) Nil
+    else f.listStatus(dir).toSeq.map(_.getPath)
+      .filter(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
   }
+
+  def doneBuckets(spark: SparkSession, outDir: String): Set[Int] =
+    manifests(Commit.fs(spark, outDir), outDir)
+      .map(_.getName.stripPrefix("bucket-").stripSuffix(".json").toInt).toSet
 
   /** Write triples for all buckets not yet committed; returns metrics
     * observed on the actual write pass (`Observation` — executor→driver
@@ -94,8 +80,8 @@ object GraphSink {
     // buckets land at a different directory depth than the committed
     // ones (readers then fail on conflicting directory structures) —
     // refuse loudly instead
-    if (done.nonEmpty) validateResumeConfig(spark, outDir, nBuckets, configHash, dayPartition)
-    val f = fs(spark, outDir)
+    val f = Commit.fs(spark, outDir)
+    if (done.nonEmpty) validateResumeConfig(f, outDir, nBuckets, configHash, dayPartition)
     // whole-bucket replace on resume (ADVICE r4): dynamic overwrite only
     // replaces the LEAF partitions present in the resumed data. Under the
     // day layout, if a pending (uncommitted) bucket's resumed rows split
@@ -135,12 +121,12 @@ object GraphSink {
     // repartition by the partition column first: one file per bucket
     // instead of (#tasks × #buckets) fragments.
     // DYNAMIC partition overwrite (not Append): a crash AFTER the parquet
-    // job commit but BEFORE the manifest rename would otherwise leave a
+    // job commit but BEFORE the manifest commit would otherwise leave a
     // committed-but-unmanifested bucket that the resumed run re-appends,
     // silently duplicating every row in it (the manifest would then
     // describe one copy while the data holds two). With dynamic
     // overwrite, re-processing a pending bucket REPLACES its partition
-    // directory, so the write is idempotent and the manifest rename stays
+    // directory, so the write is idempotent and the manifest commit stays
     // the single commit point.
     // day derived by the shared TZ-proof utcDay expression (see its doc):
     // a resume under a different session TZ must not re-split
@@ -198,18 +184,9 @@ object GraphSink {
     f.mkdirs(new Path(s"$outDir/_manifests"))
     for (r <- perBucket) {
       val bucket = r.getInt(0)
-      val json =
-        s"""{"bucket":$bucket,"rows":${r.getLong(1)},"fingerprint":${r.getLong(2)},""" +
-          s""""config":"$configHash","n_buckets":$nBuckets,"day_partition":$dayPartition}"""
-      val tmp = new Path(s"$outDir/_manifests/.bucket-$bucket.json.tmp")
-      val dst = new Path(s"$outDir/_manifests/bucket-$bucket.json")
-      val out = f.create(tmp, true)
-      out.write(json.getBytes(StandardCharsets.UTF_8))
-      out.close()
-      // rename IS the commit point: fail loudly rather than leave the
-      // bucket data committed but unmanifested (the resume protocol would
-      // then re-process it — idempotent, but the failure must surface)
-      require(f.rename(tmp, dst), s"manifest commit rename failed: $tmp -> $dst")
+      Commit.commit(f, s"$outDir/_manifests/bucket-$bucket.json", Commit.json(
+        "bucket" -> bucket, "rows" -> r.getLong(1), "fingerprint" -> r.getLong(2),
+        "config" -> configHash, "n_buckets" -> nBuckets, "day_partition" -> dayPartition))
     }
     WriteMetrics(perBucket.length, done.size, rows, convs)
   }
@@ -237,83 +214,71 @@ object GraphSink {
     * manifests alone (on a resume it covers the skipped buckets too).
     */
   def committedRows(spark: SparkSession, outDir: String): Long = {
-    val f = fs(spark, outDir)
-    val dir = new Path(s"$outDir/_manifests")
-    if (!f.exists(dir)) 0L
-    else f.listStatus(dir).toSeq.map(_.getPath)
-      .filter(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
-      .map { p =>
-        val json = readText(f, p)
-        """"rows":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
-          .getOrElse(sys.error(s"manifest $p records no rows: $json"))
-      }.sum
+    val f = Commit.fs(spark, outDir)
+    manifests(f, outDir).flatMap(p => Commit.readFields(f, p.toString)).map(_.long("rows")).sum
   }
 
-  /** Refuse to resume under a different partition function or config:
-    * reads one committed manifest and compares its recorded n_buckets /
-    * config against the current run's. Manifests written before these
-    * fields existed are accepted (no recorded value to contradict).
+  /** The layout a bucketed table was committed with — (n_buckets,
+    * config, day_partition) — from a bucket manifest or an incremental
+    * intent marker. A missing n_buckets is refused: the bucket ids mean
+    * nothing without it. Markers written before the other two fields
+    * existed were all config "v1" and flat.
     */
-  private def validateResumeConfig(spark: SparkSession, outDir: String,
-      nBuckets: Int, configHash: String, dayPartition: Boolean = false): Unit = {
-    val f = fs(spark, outDir)
-    val dir = new Path(s"$outDir/_manifests")
-    val sample = f.listStatus(dir).toSeq
-      .map(_.getPath).find(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
-    for (p <- sample) {
-      val json = readText(f, p)
-      for (m <- """"n_buckets":(\d+)""".r.findFirstMatchIn(json)) {
-        require(m.group(1).toInt == nBuckets,
-          s"resume with nBuckets=$nBuckets against a table committed with " +
-            s"n_buckets=${m.group(1)} ($p): the bucket ids are incompatible — " +
-            "use the original bucket count or a fresh output directory")
-      }
-      for (m <- """"config":"([^"]*)"""".r.findFirstMatchIn(json)) {
-        require(m.group(1) == configHash,
-          s"resume with config=$configHash against a table committed with " +
-            s"config=${m.group(1)} ($p): clear the output or keep the config stable")
-      }
-      // manifests written before the field existed were all flat layout
-      val committedDay = """"day_partition":(true|false)""".r.findFirstMatchIn(json)
-        .exists(_.group(1).toBoolean)
-      require(committedDay == dayPartition,
+  def layoutOf(m: Commit.Fields): (Int, String, Boolean) = (
+    m.int("n_buckets"),
+    if (m.has("config")) m.str("config") else "v1",
+    m.has("day_partition") && m.bool("day_partition"))
+
+  /** One committed bucket manifest; None before the first commit. */
+  private def sampleManifest(f: FileSystem, outDir: String): Option[Commit.Fields] =
+    manifests(f, outDir).headOption.flatMap(p => Commit.readFields(f, p.toString))
+
+  /** Refuse to resume under a different partition function, config or
+    * partition depth than the committed table's.
+    */
+  private def validateResumeConfig(f: FileSystem, outDir: String,
+      nBuckets: Int, configHash: String, dayPartition: Boolean): Unit =
+    for (m <- sampleManifest(f, outDir)) {
+      val ((nb, cfg, day), p) = (layoutOf(m), m.path)
+      require(nb == nBuckets,
+        s"resume with nBuckets=$nBuckets against a table committed with " +
+          s"n_buckets=$nb ($p): the bucket ids are incompatible — " +
+          "use the original bucket count or a fresh output directory")
+      require(cfg == configHash,
+        s"resume with config=$configHash against a table committed with " +
+          s"config=$cfg ($p): clear the output or keep the config stable")
+      require(day == dayPartition,
         s"resume with dayPartition=$dayPartition against a table committed with " +
-          s"day_partition=$committedDay ($p): the partition depths are incompatible — " +
+          s"day_partition=$day ($p): the partition depths are incompatible — " +
           "keep the layout or use a fresh output directory")
     }
-  }
 
   // ------------------------------------------------------- link state
 
   /** What an incremental run merges against: the surface-node table and
     * its component labels, plus the identity tokens of every input batch
     * already applied (the double-apply guard — re-merging a batch would
-    * double its mention counts and duplicate its triples). Committed via
-    * the usual tmp+rename marker; a directory without `_committed.json`
+    * double its mention counts and duplicate its triples). Committed by a
+    * [[Commit]] marker; a directory without `_committed.json`
     * is not link state (a crash mid-write must read as "absent", with
     * the full job as the remediation).
     */
   final case class LinkState(
       nodes: DataFrame, labels: DataFrame, appliedTokens: Seq[String], nNodes: Long)
 
-  private def linkStateMarker(dir: String) = new Path(s"$dir/_committed.json")
+  private def linkStateMarker(dir: String) = s"$dir/_committed.json"
 
   def writeLinkState(spark: SparkSession, nodes: DataFrame, labels: DataFrame,
       dir: String, appliedTokens: Seq[String] = Nil): Unit = {
-    val f = fs(spark, dir)
+    val f = Commit.fs(spark, dir)
     // invalidate first: a crash below leaves no marker, not a stale one
-    f.delete(linkStateMarker(dir), false)
+    f.delete(new Path(linkStateMarker(dir)), false)
     nodes.select(col("norm"), col("tag"), col("n_mentions"), col("surface"), col("node_id"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/nodes")
     labels.select(col("node_id"), col("component"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/labels")
     val n = spark.read.parquet(s"$dir/nodes").count()
-    val json = s"""{"n_nodes":$n,"applied":[${appliedTokens.map("\"" + _ + "\"").mkString(",")}]}"""
-    val tmp = new Path(s"$dir/._committed.json.tmp")
-    val out = f.create(tmp, true)
-    out.write(json.getBytes(StandardCharsets.UTF_8))
-    out.close()
-    require(f.rename(tmp, linkStateMarker(dir)), s"link-state commit rename failed in $dir")
+    Commit.commit(f, linkStateMarker(dir), Commit.json("n_nodes" -> n, "applied" -> appliedTokens))
   }
 
   /** None when the directory holds no COMMITTED link state. The node
@@ -322,20 +287,15 @@ object GraphSink {
     * loudly instead of silently merging against partial state.
     */
   def readLinkState(spark: SparkSession, dir: String): Option[LinkState] = {
-    val f = fs(spark, dir)
-    if (!f.exists(linkStateMarker(dir))) return None
+    val marker = Commit.readFields(Commit.fs(spark, dir), linkStateMarker(dir))
+      .getOrElse(return None)
     // the dir is swapped IN PLACE by incremental runs; Spark's global
     // FileStatusCache has no TTL, so a listing cached before the swap
     // would resolve to deleted part files
     spark.catalog.refreshByPath(s"$dir/nodes")
     spark.catalog.refreshByPath(s"$dir/labels")
-    val json = readText(f, linkStateMarker(dir))
-    val nRecorded = """"n_nodes":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
-      .getOrElse(sys.error(s"malformed link-state marker in $dir: $json"))
-    val applied = """"applied":\[([^\]]*)\]""".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(",").toSeq.map(_.stripPrefix("\"").stripSuffix("\"")))
-      .getOrElse(Nil)
+    val nRecorded = marker.long("n_nodes")
+    val applied = if (marker.has("applied")) marker.strs("applied") else Nil
     val nodes = spark.read.parquet(s"$dir/nodes")
     require(nodes.count() == nRecorded,
       s"link state in $dir holds ${nodes.count()} nodes but its marker recorded " +
@@ -347,22 +307,8 @@ object GraphSink {
     * manifest: (n_buckets, configHash, day_partition). None when no
     * manifest has been committed.
     */
-  def readCommittedLayout(spark: SparkSession, outDir: String): Option[(Int, String, Boolean)] = {
-    val f = fs(spark, outDir)
-    val dir = new Path(s"$outDir/_manifests")
-    if (!f.exists(dir)) return None
-    val sample = f.listStatus(dir).toSeq
-      .map(_.getPath).find(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
-    sample.map { p =>
-      val json = readText(f, p)
-      val nb = """"n_buckets":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
-        .getOrElse(sys.error(s"manifest $p lacks n_buckets — table predates the layout record"))
-      val cfg = """"config":"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1)).getOrElse("v1")
-      val day = """"day_partition":(true|false)""".r.findFirstMatchIn(json)
-        .exists(_.group(1).toBoolean)
-      (nb, cfg, day)
-    }
-  }
+  def readCommittedLayout(spark: SparkSession, outDir: String): Option[(Int, String, Boolean)] =
+    sampleManifest(Commit.fs(spark, outDir), outDir).map(layoutOf)
 
   /** Both dimension-table writes repartition by their partition column
     * first (r6, guide §6): without it every task writes a fragment into

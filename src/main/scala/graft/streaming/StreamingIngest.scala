@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.corpus.Turn
-import graft.pipeline.{MentionRow, TaggedRow, TripleRow}
+import graft.pipeline.{Commit, MentionRow, TaggedRow, TripleRow}
 import graft.semantics.{NerModel, TripleAssembler}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.functions._
@@ -313,9 +313,9 @@ object StreamingIngest {
   /** Streaming triple materialization with exactly-once micro-batches:
     * foreachBatch writes each batch's triples to a batch-scoped
     * directory (directory-atomic) and then commits a manifest JSON
-    * {batch, rows, fingerprint} via temp-file rename — the GraphSink
-    * protocol applied to the stream. Structured Streaming replays a
-    * failed batch WITH THE SAME batchId, so the manifest check makes
+    * {batch, rows, fingerprint} through [[graft.pipeline.Commit]] — the
+    * GraphSink protocol applied to the stream. Structured Streaming
+    * replays a failed batch WITH THE SAME batchId, so the manifest check makes
     * re-delivery a no-op: a batch is either fully committed (manifest
     * present) or fully re-written (directory overwritten), never
     * duplicated. The triples table is the union of batch=* directories;
@@ -370,8 +370,9 @@ object StreamingIngest {
   }
 
   /** Commit point for a canonical-map snapshot: parquet first, then a
-    * `_canon_version` marker via temp-file rename (the same protocol as
-    * every other commit in the repo). The version token is DERIVED from
+    * `_canon_version` marker committed through [[graft.pipeline.Commit]]
+    * (the parquet overwrite has already removed the previous marker with
+    * the rest of the directory). The version token is DERIVED from
     * the map content (count + order-independent xxhash64 fingerprint),
     * so re-publishing an identical map is a no-op for running streams
     * and a changed map always bumps the token. This is the producer half
@@ -387,15 +388,7 @@ object StreamingIngest {
         expr("bit_xor(xxhash64(norm, tag, entity_id, canonical_norm))").as("fp"))
       .collect()(0)
     val version = s"${r.getLong(0)}-${if (r.isNullAt(1)) 0L else r.getLong(1)}"
-    val hfs = new org.apache.hadoop.fs.Path(canonDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$canonDir/._canon_version.tmp")
-    val dst = new org.apache.hadoop.fs.Path(s"$canonDir/_canon_version")
-    if (hfs.exists(dst)) hfs.delete(dst, false)
-    val out = hfs.create(tmp, true)
-    out.write(version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    require(hfs.rename(tmp, dst), s"canon version commit rename failed: $tmp -> $dst")
+    Commit.commit(Commit.fs(spark, canonDir), s"$canonDir/_canon_version", version)
     version
   }
 
@@ -405,16 +398,13 @@ object StreamingIngest {
     * refresh on any rewrite.
     */
   def canonSnapshotVersion(spark: SparkSession, canonDir: String): String = {
+    val hfs = Commit.fs(spark, canonDir)
     val dir = new org.apache.hadoop.fs.Path(canonDir)
-    val hfs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$canonDir/_canon_version")
-    if (hfs.exists(marker)) {
-      val in = hfs.open(marker)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-    } else if (!hfs.exists(dir)) "absent"
-    else hfs.listStatus(dir).toSeq
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|").hashCode.toString
+    Commit.read(hfs, s"$canonDir/_canon_version").map(_.trim).getOrElse(
+      if (!hfs.exists(dir)) "absent"
+      else hfs.listStatus(dir).toSeq
+        .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+        .sorted.mkString("|").hashCode.toString)
   }
 
   /** Driver-side cache of the latest canonical-map snapshot, swapped
@@ -474,7 +464,7 @@ object StreamingIngest {
         val resolved = graft.pipeline.KgPipeline.resolveTriplesBroadcast(batch, canon)
         writeBatch(resolved, outDir, batchId,
           table = "resolved_triples", manifestPrefix = "stream-resolved-batch",
-          extraManifest = s""","canon_version":"$version"""")
+          canonVersion = Some(version))
       }
       .option("checkpointLocation", s"$outDir/_checkpoint_resolved")
     trigger.fold(writer)(writer.trigger).start()
@@ -482,20 +472,16 @@ object StreamingIngest {
 
   /** One batch commit (factored out so the idempotence spec can replay
     * a batchId directly): skip if manifested, else overwrite the batch
-    * directory and rename-commit the manifest.
+    * directory and commit the manifest. `canonVersion` records the
+    * canonical-map snapshot a resolved batch was resolved against.
     */
   def writeBatch(batch: org.apache.spark.sql.DataFrame, outDir: String, batchId: Long,
       table: String = "triples", manifestPrefix: String = "stream-batch",
-      extraManifest: String = ""): Unit = {
-    val spark = batch.sparkSession
-    // resolve the filesystem FROM outDir (not the default FS): on an
-    // hdfs://... or s3a://... sink the default-FS handle would check
-    // manifest existence on the wrong filesystem (ADVICE r2)
-    val hfs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifest = new org.apache.hadoop.fs.Path(
-      s"$outDir/_manifests/$manifestPrefix-$batchId.json")
-    if (hfs.exists(manifest)) return // already committed — replay is a no-op
+      canonVersion: Option[String] = None): Unit = {
+    val hfs = Commit.fs(batch.sparkSession, outDir)
+    val manifest = s"$outDir/_manifests/$manifestPrefix-$batchId.json"
+    // already committed — replay is a no-op
+    if (hfs.exists(new org.apache.hadoop.fs.Path(manifest))) return
     // manifest stats observed ON the write pass (r6, guide §1/§5): the
     // former separate stats agg executed the batch's ENTIRE lineage a
     // second time — for the resolved sink that is the NLP tagging +
@@ -515,18 +501,11 @@ object StreamingIngest {
     val metrics = graft.pipeline.GraphSink.observedMetrics(obs, batch)
     val rows = metrics.fold(0L)(_("rows").asInstanceOf[Long])
     val fp = metrics.fold(0L)(_("fp").asInstanceOf[Long])
-    val json = s"""{"batch":$batchId,"rows":$rows,"fingerprint":$fp$extraManifest}"""
-    hfs.mkdirs(manifest.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$outDir/_manifests/.$manifestPrefix-$batchId.json.tmp")
-    val out = hfs.create(tmp, true)
-    out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    // rename IS the commit point — a silent false return would leave the
-    // batch uncommitted while its parquet exists (ADVICE r2); failing
-    // loudly lets Structured Streaming retry the batch idempotently
-    require(hfs.rename(tmp, manifest),
-      s"manifest commit rename failed for batch $batchId: $tmp -> $manifest")
+    // a failed commit fails the batch, which Structured Streaming retries
+    // idempotently
+    Commit.commit(hfs, manifest, Commit.json(
+      Seq("batch" -> batchId, "rows" -> rows, "fingerprint" -> fp) ++
+        canonVersion.map("canon_version" -> _): _*))
   }
 
   /** Run one synchronous pass over whatever files exist (memory sink) —

@@ -4,9 +4,9 @@ import graft.pipeline.{KgPipeline, ScaleLinking}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** CC-loop attribution probe (r6): runs the in-memory
-  * connectedComponentsLoop over the ScaleLinking node/edge universe and
-  * reports wall + the executed plan's exchange count for one iteration
+/** CC-loop attribution probe (r6): runs connectedComponentsLoop without
+  * a checkpoint dir over the ScaleLinking node/edge universe and reports
+  * wall + the executed plan's exchange count for one iteration
   * step, so the partitioning-aware loop change has plan-shape evidence
   * (the loop is pipeline-internal — no declared query exposes its plan).
   */

@@ -135,6 +135,15 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     intercept[RuntimeException] {
       KgIncrementalJob.run(spark, out, s"$dir/in_b", model, failAfter = Some("staged"))
     }
+    // the committed intent marker keeps the byte format earlier releases
+    // wrote, so their interrupted runs still resume
+    val intentPath = s"$out/_incr/marker.json"
+    val intent = java.nio.file.Files.readString(java.nio.file.Path.of(intentPath))
+    val m = graft.pipeline.Commit.decode(intentPath, intent)
+    assert(m.str("token").matches("b\\d+-[0-9a-f]{16}") && m.ints("buckets").nonEmpty, intent)
+    assert(intent ==
+      s"""{"token":"${m.str("token")}","buckets":[${m.ints("buckets").mkString(",")}],""" +
+        s""""n_buckets":8,"config":"v1","day_partition":false}""")
     // crash mid-write (manifests invalidated, rewrite unfinished):
     intercept[RuntimeException] {
       KgIncrementalJob.run(spark, out, s"$dir/in_b", model, failAfter = Some("invalidated"))

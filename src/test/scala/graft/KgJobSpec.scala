@@ -134,6 +134,22 @@ class KgJobSpec extends AnyFunSuite {
       KgJob.run(spark, input, modelPath, output2, buckets = 8, dayPartition = false)
     }
     assert(eDay.getMessage.contains("day_partition"), eDay.getMessage)
+
+    // a committed manifest that records no n_buckets cannot say which
+    // partition function its bucket ids index: the resume refuses and
+    // names the manifest instead of assuming the current bucket count
+    for (f <- new java.io.File(s"$output/_manifests").listFiles()
+         if f.getName.startsWith("bucket-")) {
+      java.nio.file.Files.writeString(f.toPath,
+        java.nio.file.Files.readString(f.toPath).replaceAll(""","n_buckets":\d+""", ""))
+      // drop the local FS's checksum shadow of the edited file
+      new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+    }
+    val eNb = intercept[IllegalStateException] {
+      KgJob.run(spark, input, modelPath, output, buckets = 8)
+    }
+    assert(eNb.getMessage.contains(s"$output/_manifests/bucket-") &&
+      eNb.getMessage.contains("n_buckets"), eNb.getMessage)
   }
 
   /** SQL executions of one fresh KgJob.run on this fixture: the model

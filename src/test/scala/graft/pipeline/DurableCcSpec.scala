@@ -45,14 +45,14 @@ class DurableCcSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("cc_spec_").toString
 
     val crashed = intercept[RuntimeException] {
-      KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir, failAfterIters = 2)
+      KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir), failAfterIters = 2)
     }
     assert(crashed.getMessage.contains("injected crash"))
     // iteration 2 is committed on disk; iteration 1 was pruned
     assert(new java.io.File(s"$dir/iter-2.done.json").exists())
     assert(!new java.io.File(s"$dir/iter-1.done.json").exists())
 
-    val resumed = KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir)
+    val resumed = KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir))
     assert(KgPipeline.lastResumedFrom == 2,
       s"expected resume from committed iteration 2, got ${KgPipeline.lastResumedFrom}")
 
@@ -66,9 +66,9 @@ class DurableCcSpec extends AnyFunSuite {
   test("re-running after convergence takes the fast path (no propagation)") {
     val (nodes, edges) = chainGraph()
     val dir = Files.createTempDirectory("cc_spec_").toString
-    val first = KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir)
+    val first = KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir))
     val itersFirst = KgPipeline.lastIterations
-    val again = KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir)
+    val again = KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir))
     assert(KgPipeline.lastResumedFrom == itersFirst,
       "converged checkpoint should be picked up as the resume point")
     assert(mismatches(first, again) == 0)
@@ -78,7 +78,7 @@ class DurableCcSpec extends AnyFunSuite {
     val (nodes, edges) = chainGraph()
     val dir = Files.createTempDirectory("cc_spec_").toString
     intercept[RuntimeException] {
-      KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir, failAfterIters = 3)
+      KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir), failAfterIters = 3)
     }
     // recreate the crash-in-window state: iter-2 marker + dir survive
     // alongside the committed iter-3 (the crash landed between iter-3's
@@ -88,7 +88,7 @@ class DurableCcSpec extends AnyFunSuite {
     Files.writeString(java.nio.file.Path.of(s"$dir/iter-2.done.json"), stale)
     Files.createDirectories(java.nio.file.Path.of(s"$dir/iter-2"))
 
-    val resumed = KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir)
+    val resumed = KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir))
     assert(KgPipeline.lastResumedFrom == 3, "must resume from the max committed iteration")
     assert(!new java.io.File(s"$dir/iter-2.done.json").exists(), "stale marker must be swept")
     assert(!new java.io.File(s"$dir/iter-2").exists(), "stale frontier dir must be swept")
@@ -99,12 +99,30 @@ class DurableCcSpec extends AnyFunSuite {
     val (nodes, edges) = chainGraph()
     val dir = Files.createTempDirectory("cc_spec_").toString
     intercept[RuntimeException] {
-      KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir, failAfterIters = 1)
+      KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir), failAfterIters = 1)
     }
     val (otherNodes, otherEdges) = chainGraph(150)
     val e = intercept[IllegalArgumentException] {
-      KgPipeline.connectedComponentsLoopDurable(otherNodes, otherEdges, dir)
+      KgPipeline.connectedComponentsLoop(otherNodes, otherEdges, Some(dir))
     }
     assert(e.getMessage.contains("different"))
+  }
+
+  test("a truncated newest iteration marker fails loudly and names the marker") {
+    val (nodes, edges) = chainGraph()
+    val dir = Files.createTempDirectory("cc_spec_").toString
+    intercept[RuntimeException] {
+      KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir), failAfterIters = 2)
+    }
+    val iter2 = java.nio.file.Path.of(s"$dir/iter-2.done.json")
+    val json = Files.readString(iter2)
+    Files.writeString(iter2, json.take(json.length / 2))
+    // the local FS's checksum shadow would reject the edit before the
+    // marker is decoded; a torn write on a store without one is the case
+    Files.delete(java.nio.file.Path.of(s"$dir/.iter-2.done.json.crc"))
+    val e = intercept[IllegalStateException] {
+      KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir))
+    }
+    assert(e.getMessage.contains(s"$dir/iter-2.done.json"), e.getMessage)
   }
 }
